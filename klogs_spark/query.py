@@ -15,7 +15,19 @@ from datetime import datetime
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .schema import PARTITION_COLUMN
 from .transform import field_number, field_string, has_field
+
+# java.time.ZoneOffset.MAX_SECONDS: no zone's local time is further than
+# this from UTC
+MAX_ZONE_OFFSET_S = 18 * 3600
+
+
+def _utc_day(ts, shift_s: int) -> Column:
+    """UTC day of ``ts + shift_s`` s, ``ts`` cast as the timestamp filter
+    casts it; constant-folds, so Spark prunes partitions with it."""
+    secs = F.unix_seconds(F.lit(ts).cast("timestamp")) + shift_s
+    return F.date_from_unix_date(F.floor(secs / 86400).cast("int"))
 
 
 class LogsQuery:
@@ -46,7 +58,7 @@ class LogsQuery:
         # False when the table holds files predating a promotion (layout
         # marker "promotions_deficient", set by write_logs_promoted and
         # cleared by materialize_promotions): those rows read the physical
-        # column as NULL through mergeSchema, so the promoted existence
+        # column as NULL (the files lack it), so the promoted existence
         # fast path would flip F5 answers — fall back to the map instead
         self.promoted_exists_ok = promoted_exists_ok
 
@@ -60,8 +72,20 @@ class LogsQuery:
 
     # --- filters -----------------------------------------------------------
     def time_range(self, start: datetime | str, end: datetime | str) -> "LogsQuery":
-        """F1 — prunes daily partitions (schema.sql:17)."""
-        return self._wrap(self.df.filter(F.col("timestamp").between(start, end)))
+        """F1 — ``timestamp BETWEEN start AND end``. On a frame with the
+        ``date`` partition (schema.sql:17) it adds ``date BETWEEN`` the UTC
+        days of ``start - 18 h`` and ``end + 18 h``: Spark never derives a
+        partition filter from a timestamp range. The writer stamped ``date``
+        in its own session zone, unknown here; no zone is more than 18 h
+        from UTC, so the pruned result is exact for any writer and reader
+        zones (a one-day slack around the reader's ``to_date`` is not:
+        +14 h and -12 h zones can date one instant two days apart)."""
+        cond = F.col("timestamp").between(start, end)
+        if PARTITION_COLUMN in self.df.columns:
+            cond &= F.col(PARTITION_COLUMN).between(
+                _utc_day(start, -MAX_ZONE_OFFSET_S), _utc_day(end, MAX_ZONE_OFFSET_S)
+            )
+        return self._wrap(self.df.filter(cond))
 
     def where_env(self, **eq: str) -> "LogsQuery":
         """F2 — envelope equality, served by the cluster-key sort (schema.sql:18)."""
@@ -99,7 +123,7 @@ class LogsQuery:
         the map lookup, and map values are never NULL by the P6 null-
         elimination contract). The fast path is taken only while the
         table has no deficient (pre-promotion) files — those read the
-        physical column as NULL via mergeSchema even when the map HAS
+        physical column as NULL (the files lack it) even when the map HAS
         the key, which would flip the answer."""
         if not in_numbers and key in self.promotions and self.promoted_exists_ok:
             return self._wrap(
@@ -216,7 +240,6 @@ def fetch_context(
     """
     from datetime import datetime, timedelta
 
-    from .schema import PARTITION_COLUMN
     from .table import read_logs
 
     anchor = (

@@ -3,8 +3,8 @@
 Reference schema.sql:16-21 defines the entire performance contract (SURVEY
 §1.3). Spark mapping:
 
-- ``PARTITION BY toDate(timestamp)``  -> ``partitionBy("date")`` parquet; Catalyst
-  prunes day directories for time-range predicates (F1) automatically.
+- ``PARTITION BY toDate(timestamp)``  -> ``partitionBy("date")`` parquet; the
+  ``date`` bounds ``LogsQuery.time_range`` (F1) derives prune day directories.
 - ``ORDER BY (cluster, ..., timestamp)`` -> ``sortWithinPartitions`` on the same
   key before write, so parquet row-group min/max stats skip granules for
   selective envelope predicates (F2) — the sparse-primary-index equivalent.
@@ -20,12 +20,14 @@ maintain; writes scale horizontally because partitions are independent.
 
 from __future__ import annotations
 
+from collections.abc import Collection
 from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StringType, StructField, StructType
 
-from .schema import CLUSTER_KEY, LOG_COLUMNS, PARTITION_COLUMN
+from .schema import CLUSTER_KEY, LOG_COLUMNS, LOG_SCHEMA, PARTITION_COLUMN
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -167,8 +169,15 @@ def write_logs(
             _write_layout_marker(spark, path, {"layout": "cluster"})
 
 
-def read_logs(spark: SparkSession, path: str) -> DataFrame:
-    """Read the logs table; select() restores the canonical column order.
+def read_logs(
+    spark: SparkSession, path: str, promoted: Collection[str] = ()
+) -> DataFrame:
+    """Read the logs table in canonical column order, then the
+    ``promoted`` physical columns (strings, as promote_string_field writes
+    them; NULL in files older than the promotion until
+    :func:`materialize_promotions` backfills them). The schema is
+    declared, so no job infers it, and an existing directory holding no
+    parquet files reads as an empty frame.
 
     Manifest-aware (VERDICT r17 #2 + review): on a table with ANY
     published snapshot, a raw directory read is wrong twice over — it
@@ -177,15 +186,18 @@ def read_logs(spark: SparkSession, path: str) -> DataFrame:
     deliberately retains for pinned readers. Such tables read through
     the manifest layer's current-state view instead (head files +
     committed unmanifested appends, vector anti-joined). Plain
-    directories pay one ``_manifest`` listStatus for the check and read
-    raw as before."""
+    directories pay one ``_manifest`` listStatus for the check."""
     from .manifest import read_current_state, snapshot_versions
 
+    cols = [PARTITION_COLUMN, *LOG_COLUMNS, *promoted]
     if snapshot_versions(spark, path):
-        return read_current_state(spark, path).select(
-            PARTITION_COLUMN, *LOG_COLUMNS
-        )
-    return spark.read.parquet(path).select(PARTITION_COLUMN, *LOG_COLUMNS)
+        return read_current_state(spark, path).select(*cols)
+    schema = StructType(
+        LOG_SCHEMA.fields
+        + [StructField(c, StringType()) for c in promoted]
+        + [StructField(PARTITION_COLUMN, DateType())]
+    )
+    return spark.read.schema(schema).parquet(path).select(*cols)
 
 
 def register_view(spark: SparkSession, path: str, name: str = "logs") -> None:
@@ -194,31 +206,7 @@ def register_view(spark: SparkSession, path: str, name: str = "logs") -> None:
     expose their promoted physical columns, so SQL callers can filter on
     the materialized fast path directly."""
     promos = read_layout(spark, path).get("promotions") or {}
-    df = _read_with_promotions(spark, path, promos)
-    df.createOrReplaceTempView(name)
-
-
-def _read_with_promotions(spark: SparkSession, path: str, promos: dict):
-    """Table read exposing the promoted physical columns. mergeSchema makes
-    the columns resolve even on a table with not-yet-materialized plain
-    history (those rows read NULL until materialize_promotions backfills
-    them — the documented DEFAULT/MATERIALIZE contract). Manifest-aware
-    like :func:`read_logs`: any published snapshot routes the read
-    through the manifest layer's current-state view (read_current_state
-    reads with mergeSchema, so promoted physical columns survive the
-    detour)."""
-    from .manifest import read_current_state, snapshot_versions
-
-    if snapshot_versions(spark, path):
-        return read_current_state(spark, path).select(
-            PARTITION_COLUMN, *LOG_COLUMNS, *promos.values()
-        )
-    reader = spark.read
-    if promos:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(path).select(
-        PARTITION_COLUMN, *LOG_COLUMNS, *promos.values()
-    )
+    read_logs(spark, path, promos.values()).createOrReplaceTempView(name)
 
 
 def logs_query(spark: SparkSession, path: str):
@@ -236,7 +224,7 @@ def logs_query(spark: SparkSession, path: str):
     layout = read_layout(spark, path)
     promos = layout.get("promotions") or {}
     return LogsQuery(
-        _read_with_promotions(spark, path, promos),
+        read_logs(spark, path, promos.values()),
         promos,
         promoted_exists_ok=not layout.get("promotions_deficient", False),
     )

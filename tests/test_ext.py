@@ -2057,8 +2057,9 @@ def test_quality_gate_forms_agree_on_edge_docs(spark):
         quality_filter, quality_kept_rows, with_quality_keep,
     )
 
-    healthy = ("the cat sat of the mat and the dog ran to the park and "
-               "a bird flew of the tree to a nest and all was well there")
+    # top token 2 of 28 (71,429 ppm), under the repetition gate's 130,000
+    healthy = ("the cat sat on a mat and one dog ran to the park while "
+               "a bird flew over our tree to its nest and all was well there")
     rows = [
         (1, None), (2, ""), (3, "   "), (4, "x " * 19), (5, "x " * 25),
         (6, "the " * 40), (7, "zz qq ww " * 10), (8, healthy),
@@ -2077,4 +2078,5 @@ def test_quality_gate_forms_agree_on_edge_docs(spark):
     for i, keep in keep_map.items():
         assert flag_map[i] == keep, (i, flag_map[i], keep)
     assert kept_ids == {i for i, k in flag_map.items() if k}
-    assert 8 in kept_ids and 1 not in flag_map or not flag_map.get(1)
+    assert 8 in kept_ids
+    assert not flag_map.get(1)

@@ -2,12 +2,12 @@
 
 from __future__ import annotations
 
-from datetime import date, datetime
+from datetime import date, datetime, timezone
 from pathlib import Path
 
 import pytest
 
-from klogs_spark.schema import CLUSTER_KEY
+from klogs_spark.schema import CLUSTER_KEY, LOG_COLUMNS, LOG_SCHEMA
 from klogs_spark.table import apply_retention, read_logs, register_view, write_logs
 
 
@@ -60,6 +60,115 @@ def test_partition_pruning_in_plan(spark, logs_df, tmp_path):
         r[0] for r in df.select(F.input_file_name()).distinct().collect()
     ]
     assert touched and all("date=2026-01-02" in f for f in touched)
+
+
+def _write_timeline(spark, path: str, n: int, step_s: int) -> None:
+    """Write ``n`` logs rows, one every ``step_s`` seconds from 2026-01-01
+    00:00 UTC, under the session's current time zone."""
+    from pyspark.sql import functions as F
+
+    t0 = int(datetime(2026, 1, 1, tzinfo=timezone.utc).timestamp())
+    write_logs(
+        spark.range(n).select(
+            F.timestamp_seconds(F.lit(t0) + F.col("id") * step_s).alias("timestamp"),
+            *[F.lit(None).cast(f.dataType).alias(f.name)
+              for f in LOG_SCHEMA.fields[1:]],
+        ),
+        path,
+    )
+
+
+@pytest.fixture()
+def ten_day_table(spark, tmp_path):
+    """One row every 2 h over 2026-01-01..10 UTC."""
+    path = str(tmp_path / "logs")
+    _write_timeline(spark, path, 10 * 12, 7200)
+    return path
+
+
+def test_time_range_prunes_day_partitions(spark, ten_day_table):
+    """time_range derives a date predicate: a garbage file in every day
+    directory outside [start - 1 d, end + 1 d] would fail the query if any
+    were opened."""
+    from klogs_spark.query import LogsQuery
+
+    path = ten_day_table
+    for d in Path(path).glob("date=*"):
+        if not "2026-01-03" <= d.name[len("date="):] <= "2026-01-06":
+            (d / "part-garbage.parquet").write_bytes(b"not parquet")
+    q = LogsQuery(read_logs(spark, path)).time_range(
+        "2026-01-04 00:00:00", "2026-01-05 23:59:59"
+    )
+    assert q.count_all().collect()[0].cnt == 2 * 12
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        q.df._jdf.queryExecution(), "formatted"
+    )
+    pf = [ln for ln in plan.splitlines() if ln.startswith("PartitionFilters")]
+    assert pf and "date" in pf[0] and ">=" in pf[0] and "<=" in pf[0]
+
+
+def test_read_logs_starts_no_spark_job(spark, ten_day_table):
+    """The declared schema replaces the inference job a bare
+    spark.read.parquet starts."""
+    sc = spark.sparkContext
+    group = "read-logs-no-job"
+    sc.setJobGroup(group, "read_logs")
+    try:
+        read_logs(spark, ten_day_table)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize(
+    "writer_tz,reader_tz",
+    [
+        ("UTC", "Pacific/Kiritimati"),
+        ("UTC", "Etc/GMT+12"),
+        # 26 h apart: an instant's local days differ by two, which a
+        # one-day slack around the reader's to_date would miss
+        ("Pacific/Kiritimati", "Etc/GMT+12"),
+        ("Etc/GMT+12", "Pacific/Kiritimati"),
+    ],
+)
+def test_time_range_exact_across_time_zones(
+    spark, tmp_path, writer_tz, reader_tz
+):
+    """Pruned time_range equals the unpruned timestamp filter when the
+    reader's session zone differs from the writer's, on day-edge bounds."""
+    from pyspark.sql import functions as F
+
+    from klogs_spark.query import LogsQuery
+
+    key = "spark.sql.session.timeZone"
+    saved = spark.conf.get(key)
+    path = str(tmp_path / "logs")
+    try:
+        spark.conf.set(key, writer_tz)
+        _write_timeline(spark, path, 6 * 24, 3600)
+        spark.conf.set(key, reader_tz)
+        logs = read_logs(spark, path)
+        for lo, hi in [
+            ("2026-01-02 00:00:00", "2026-01-02 23:59:59"),
+            ("2026-01-01 00:00:00", "2026-01-03 00:00:00"),
+            ("2026-01-03 23:00:00", "2026-01-04 01:00:00"),
+            ("2026-01-05 00:00:00", "2026-01-06 23:59:59"),
+        ]:
+            pruned = LogsQuery(logs).time_range(lo, hi).df
+            unpruned = logs.filter(F.col("timestamp").between(lo, hi))
+            got = sorted(r[0] for r in pruned.select("timestamp").collect())
+            want = sorted(r[0] for r in unpruned.select("timestamp").collect())
+            assert want and got == want, (lo, hi)
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_read_logs_empty_directory_is_empty_frame(spark, tmp_path):
+    path = tmp_path / "logs"
+    path.mkdir()
+    df = read_logs(spark, str(path))
+    assert df.columns == ["date", *LOG_COLUMNS]
+    assert df.count() == 0
 
 
 def test_register_view_sql_roundtrip(spark, logs_df, tmp_path):
